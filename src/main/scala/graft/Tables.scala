@@ -25,7 +25,7 @@ object Tables {
     String, (String, org.apache.spark.sql.types.StructType)]
 
   /** One level of the path's file listing (driver metadata op). */
-  private def listDir(spark: SparkSession, path: String): Seq[org.apache.hadoop.fs.FileStatus] = {
+  private[graft] def listDir(spark: SparkSession, path: String): Seq[org.apache.hadoop.fs.FileStatus] = {
     val p = new org.apache.hadoop.fs.Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val stats = fs.globStatus(new org.apache.hadoop.fs.Path(p, "*"))
@@ -33,8 +33,11 @@ object Tables {
     else stats.toSeq
   }
 
-  /** Cheap listing key for one table path (driver metadata op). */
-  private def listingKey(listing: Seq[org.apache.hadoop.fs.FileStatus]): String =
+  /** Cheap listing key for one table path (driver metadata op): the
+    * one listing identity behind [[parquetCached]], [[fingerprint]]
+    * and the warehouse's manifest snapshot. Spark writers name every
+    * output file with a fresh part-UUID, so any write moves the key. */
+  private[graft] def listingKey(listing: Seq[org.apache.hadoop.fs.FileStatus]): String =
     listing.map(s => s"${s.getPath.getName}:${s.getLen}:${s.getModificationTime}")
       .sorted.mkString("|")
 
@@ -79,17 +82,22 @@ object Tables {
   def rowGroupCount(spark: SparkSession, file: String): Int = {
     val conf = spark.sparkContext.hadoopConfiguration
     val p = new org.apache.hadoop.fs.Path(file)
-    val st = p.getFileSystem(conf).getFileStatus(p)
-    val key = s"${st.getLen}:${st.getModificationTime}"
-    rowGroupMemo.get(file) match {
-      case Some((`key`, n)) => n
-      case _ =>
-        val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st, conf)
-        val reader = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-        val n = try reader.getRowGroups.size finally reader.close()
-        rowGroupMemo.put(file, (key, n))
-        n
-    }
+    // a file deleted or rewritten since the plan's cached listing:
+    // count it as one row group (worst case an extra spread) and let
+    // the scan raise its normal stale-listing error
+    try {
+      val st = p.getFileSystem(conf).getFileStatus(p)
+      val key = s"${st.getLen}:${st.getModificationTime}"
+      rowGroupMemo.get(file) match {
+        case Some((`key`, n)) => n
+        case _ =>
+          val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st, conf)
+          val reader = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+          val n = try reader.getRowGroups.size finally reader.close()
+          rowGroupMemo.put(file, (key, n))
+          n
+      }
+    } catch { case _: java.io.IOException => 1 }
   }
 
   def table(spark: SparkSession, dir: String, name: String): DataFrame =
@@ -168,16 +176,8 @@ object Tables {
     * state. Full SHA-256, not hashCode — a 32-bit collision would
     * silently serve stale persisted state for a changed corpus, and
     * persisted artifacts can outlive the JVM that built them. */
-  def fingerprint(spark: SparkSession, dir: String, name: String): String = {
-    val p = new org.apache.hadoop.fs.Path(s"$dir/$name.parquet")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val stats = fs.globStatus(new org.apache.hadoop.fs.Path(p, "*"))
-    val listing =
-      if (stats == null || stats.isEmpty) Seq(fs.getFileStatus(p))
-      else stats.toSeq
-    val s = listing.map(s => s"${s.getPath.getName}:${s.getLen}:${s.getModificationTime}")
-      .sorted.mkString("|")
+  def fingerprint(spark: SparkSession, dir: String, name: String): String =
     java.security.MessageDigest.getInstance("SHA-256")
-      .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
-  }
+      .digest(listingKey(listDir(spark, s"$dir/$name.parquet")).getBytes("UTF-8"))
+      .map("%02x".format(_)).mkString
 }

@@ -56,11 +56,13 @@ object Relational {
     // the already-cached FileIndex off the analyzed plan (no physical
     // planning, no job); footers are probed only when file count < p,
     // so at warehouse scale this is a listing lookup and nothing else.
+    // an empty relation has nothing to spread: repartitioning it would
+    // only add an empty shuffle stage
     val files = df.inputFiles
     val width =
       if (files.length >= p) files.length
       else files.iterator.map(Tables.rowGroupCount(spark, _)).sum
-    if (width < p) df.repartition(p, key) else df
+    if (files.nonEmpty && width < p) df.repartition(p, key) else df
   }
 
   def q1Agg(spark: SparkSession, dir: String): DataFrame =

@@ -1886,12 +1886,14 @@ object Similarity {
     // SparkSession/SQLConf InheritableThreadLocals are guaranteed to
     // flow (the global pool spawns workers lazily from arbitrary
     // parents); setActiveSession makes it explicit. Both legs run
-    // under one job group, and a failed first leg CANCELS the
-    // sibling's jobs and awaits it before rethrowing, so no stray
-    // jobs overlap the next harness entry's timing.
+    // under one job group. A failed first leg makes a best-effort
+    // cancel of the sibling's jobs (only jobs running at that
+    // instant; a leg is several jobs), then awaits the sibling before
+    // rethrowing: the await is what keeps stray jobs from overlapping
+    // the next harness entry's timing.
     import scala.concurrent.{Await, ExecutionContext, Future}
     import scala.concurrent.duration.Duration
-    import scala.util.{Failure, Success, Try}
+    import scala.util.{Success, Try}
     val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
     implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
     val group = s"ann_recall_legs_${System.nanoTime()}"

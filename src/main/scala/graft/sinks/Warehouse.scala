@@ -2,8 +2,10 @@ package graft.sinks
 
 import graft.sources.{LayoutSpec, Sdf}
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StringType, StructType}
 
 /** The 100 TB sink: a parquet warehouse with an idempotent,
   * file-granularity ingest manifest.
@@ -56,17 +58,77 @@ object Warehouse {
     else spark.emptyDataFrame
   }
 
-  /** Point lookup by primary key — the reference's headline query
-    * (indexed cid lookup: the SQLite pk + WITH_INDEX role,
-    * utils.py:181,334) at warehouse scale. The manifest's per-file
-    * [lowest_cid, highest_cid] spans ARE the index: a driver-side
-    * scan of the manifest (file-count-sized — the same bounded table
-    * the ingest skip-set reads) picks candidate source files, the
-    * isin predicate on the PARTITION column prunes the compounds
-    * scan to those directories statically, and the pushed pk filter
-    * plus parquet row-group stats finish inside them. At 100 TB the
-    * data touched is O(one partition), not O(corpus); plan-pinned
-    * (partition filters present, pk pushed). */
+  /** Driver-side copy of the ingest manifest, memoized per warehouse
+    * in [[snapshots]]: filenames and cid spans as plain arrays (a
+    * span-less row, n_compounds = 0 because nothing was extracted or
+    * [[retract]] emptied the file, gets the empty span
+    * `[Long.MaxValue, Long.MinValue]`) and, once a lookup needed
+    * it, the compounds schema with `src_filename` pinned to string as
+    * in [[compounds]]. `overflow` marks a manifest past
+    * [[ManifestCollectMax]] rows, whose rows are not held. No
+    * DataFrame or plan is kept, so the memo pins no session state. */
+  private final case class ManifestSnapshot(
+      listing: String,
+      filenames: Array[String],
+      lowestCid: Array[Long],
+      highestCid: Array[Long],
+      overflow: Boolean,
+      compoundsSchema: Option[StructType])
+
+  /** Manifest directory -> its snapshot. A snapshot is served only
+    * while the directory's listing key ([[graft.Tables.listingKey]],
+    * `name:len:mtime` per file) is unchanged: an ingest append, a
+    * retract swap and a reset all write or remove part-UUID files, so
+    * every write moves the key and the next reader rebuilds. */
+  private val snapshots = new scala.collection.concurrent.TrieMap[String, ManifestSnapshot]
+
+  /** The current manifest snapshot, or None when the warehouse has no
+    * manifest. A rebuild is one bounded collect (`limit(max + 1)`
+    * decides overflow without a count job); a warm call lists the
+    * manifest directory and starts no Spark job. */
+  private def manifestSnapshot(spark: SparkSession, warehouseDir: String): Option[ManifestSnapshot] = {
+    val dir = manifestDir(warehouseDir)
+    val path = new Path(dir)
+    if (!path.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(path)) {
+      snapshots.remove(dir)
+      return None
+    }
+    // key BEFORE rows: a write landing in between leaves rows newer
+    // than their key, which the next call rebuilds — never the reverse
+    val key = graft.Tables.listingKey(graft.Tables.listDir(spark, dir))
+    snapshots.get(dir).filter(_.listing == key).orElse {
+      val rows = manifest(spark, warehouseDir)
+        .select(col("filename"), col("lowest_cid").cast("long"), col("highest_cid").cast("long"))
+        .limit(ManifestCollectMax + 1).collect()
+      val snap =
+        if (rows.length > ManifestCollectMax)
+          ManifestSnapshot(key, Array.empty, Array.empty, Array.empty, overflow = true, None)
+        else ManifestSnapshot(key, rows.map(_.getString(0)),
+          rows.map(r => if (r.isNullAt(1)) Long.MaxValue else r.getLong(1)),
+          rows.map(r => if (r.isNullAt(2)) Long.MinValue else r.getLong(2)),
+          overflow = false, None)
+      snapshots.put(dir, snap)
+      Some(snap)
+    }
+  }
+
+  /** The snapshot's compounds schema, inferred once per manifest key.
+    * Lazy because only lookups need it: ingest's skip set must work
+    * on a manifest whose files extracted no rows, where there is no
+    * compounds data to infer from. */
+  private def compoundsSchema(spark: SparkSession, warehouseDir: String,
+                              snap: ManifestSnapshot): StructType =
+    snap.compoundsSchema.getOrElse {
+      val schema = compounds(spark, warehouseDir).schema
+      snapshots.replace(manifestDir(warehouseDir), snap, snap.copy(compoundsSchema = Some(schema)))
+      schema
+    }
+
+  /** Partition directory of one source file under compounds/. */
+  private def partitionPath(warehouseDir: String, filename: String): Path =
+    new Path(compoundsDir(warehouseDir),
+      s"src_filename=${ExternalCatalogUtils.escapePathName(filename)}")
+
   /** Span-matching files above which the lookup stops inlining the
     * prune set as an `isin` literal: on a healthy warehouse the
     * per-file [lowest, highest] spans barely overlap and a pk
@@ -79,18 +141,49 @@ object Warehouse {
     * correctness dependency. */
   val MaxLookupPruneFiles = 10000
 
+  /** Point lookup by primary key — the reference's headline query
+    * (indexed cid lookup: the SQLite pk + WITH_INDEX role,
+    * utils.py:181,334) at warehouse scale. The manifest's per-file
+    * [lowest_cid, highest_cid] spans ARE the index:
+    *  - candidate source files come from the memoized manifest
+    *    snapshot ([[manifestSnapshot]], keyed on the manifest
+    *    directory's listing), scanned on the driver;
+    *  - the scan's file index holds only the candidate partition
+    *    directories that exist, read with the snapshot's schema — no
+    *    footer-inference job and no listing of the whole table (a
+    *    stale span whose directory a crashed [[retract]] deleted
+    *    drops out here);
+    *  - the `isin` filter on the partition column and the pushed pk
+    *    filter plus row-group stats finish inside them.
+    * On an unchanged manifest the call starts no Spark job; only the
+    * returned frame's own scan runs one. At 100 TB the data touched
+    * is O(one partition), not O(corpus); plan-pinned (partition
+    * filters present, pk pushed). A manifest past
+    * [[ManifestCollectMax]] rows picks its candidates with a
+    * distributed filter instead, capped at [[MaxLookupPruneFiles]].
+    * `src_filename` is a string column, as in [[compounds]]. */
   def lookup(spark: SparkSession, warehouseDir: String, cid: Long,
              layout: LayoutSpec = LayoutSpec.default): DataFrame = {
     val pk = layout.columns.find(_.primaryKey).map(_.name)
       .getOrElse(layout.columns.head.name)
-    val files = manifest(spark, warehouseDir)
-      .filter(col("lowest_cid") <= cid && col("highest_cid") >= cid)
-      .select("filename").limit(MaxLookupPruneFiles + 1)
-      .collect().map(_.getString(0)).toSeq
-    val compounds = spark.read.parquet(compoundsDir(warehouseDir))
-    if (files.isEmpty) compounds.filter(lit(false))
-    else if (files.length > MaxLookupPruneFiles) compounds.filter(col(pk) === cid)
-    else compounds.filter(col("src_filename").isin(files: _*) && col(pk) === cid)
+    val snap = manifestSnapshot(spark, warehouseDir).getOrElse(throw new IllegalArgumentException(
+      s"lookup: no ingest manifest under $warehouseDir — nothing has been ingested there"))
+    val files =
+      if (snap.overflow) manifest(spark, warehouseDir)
+        .filter(col("lowest_cid") <= cid && col("highest_cid") >= cid)
+        .select("filename").limit(MaxLookupPruneFiles + 1)
+        .collect().map(_.getString(0)).toSeq
+      else snap.filenames.indices
+        .filter(i => snap.lowestCid(i) <= cid && snap.highestCid(i) >= cid).map(snap.filenames)
+    val schema = compoundsSchema(spark, warehouseDir, snap)
+    if (files.length > MaxLookupPruneFiles)
+      return spark.read.schema(schema).parquet(compoundsDir(warehouseDir)).filter(col(pk) === cid)
+    val fs = new Path(warehouseDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val present = files.filter(f => fs.exists(partitionPath(warehouseDir, f)))
+    if (present.isEmpty) spark.createDataFrame(java.util.Collections.emptyList[Row](), schema)
+    else spark.read.schema(schema).option("basePath", compoundsDir(warehouseDir))
+      .parquet(present.map(partitionPath(warehouseDir, _).toString): _*)
+      .filter(col("src_filename").isin(present: _*) && col(pk) === cid)
   }
 
   /** Secondary-index lookup — the reference's OTHER headline query
@@ -134,29 +227,27 @@ object Warehouse {
 
   /** Files under `all` not yet recorded in the manifest. Small
     * manifests (the PubChem scale the reference documents —
-    * thousands of files) use a driver-side Set, one collect, same as
-    * the reference's `get_sdf_files_not_in_db`. A manifest past
-    * `ManifestCollectMax` rows switches to a left-anti join of the
-    * listing against the manifest table, so a million-file warehouse
-    * never materializes its full history on the driver. The probe
-    * `limit(max + 1)` makes the choice without a separate count
-    * job. */
+    * thousands of files) take the skip set from the same memoized
+    * snapshot the point lookup uses ([[manifestSnapshot]]): the
+    * reference's `get_sdf_files_not_in_db` as a driver-side Set, and
+    * a no-op re-ingest over an unchanged manifest starts no Spark
+    * job. A manifest past `ManifestCollectMax` rows switches to a
+    * left-anti join of the listing against the manifest table, so a
+    * million-file warehouse never materializes its full history on
+    * the driver. */
   private def pendingFiles(spark: SparkSession, warehouseDir: String,
-                           all: Seq[String]): Seq[String] = {
-    val m = manifest(spark, warehouseDir)
-    if (!m.columns.contains("filename")) return all.sorted
-    val probe = m.select("filename").limit(ManifestCollectMax + 1)
-      .collect().map(_.getString(0))
-    if (probe.length <= ManifestCollectMax) {
-      val done = probe.toSet
-      all.filterNot(f => done.contains(basename(f))).sorted
-    } else {
-      import spark.implicits._
-      all.map(p => (p, basename(p))).toDF("path", "filename")
-        .join(m.select("filename"), Seq("filename"), "left_anti")
-        .select("path").as[String].collect().toSeq.sorted
+                           all: Seq[String]): Seq[String] =
+    manifestSnapshot(spark, warehouseDir) match {
+      case None => all.sorted
+      case Some(snap) if !snap.overflow =>
+        val done = snap.filenames.toSet
+        all.filterNot(f => done.contains(basename(f))).sorted
+      case Some(_) =>
+        import spark.implicits._
+        all.map(p => (p, basename(p))).toDF("path", "filename")
+          .join(manifest(spark, warehouseDir).select("filename"), Seq("filename"), "left_anti")
+          .select("path").as[String].collect().toSeq.sorted
     }
-  }
 
   /** List input files matching the glob (driver-side metadata op —
     * O(#files), same as the reference's glob at utils.py:308). */
@@ -166,16 +257,26 @@ object Warehouse {
     Option(fs.globStatus(path)).map(_.toSeq.map(_.getPath.toString)).getOrElse(Nil)
   }
 
+  /** [[listSdfFiles]] for a writer: a glob matching no file is a
+    * mistyped path or an unmounted volume, not an empty batch, so it
+    * fails here and names the glob. */
+  private def inputFiles(spark: SparkSession, glob: String): Seq[String] = {
+    val all = listSdfFiles(spark, glob)
+    require(all.nonEmpty, s"ingest: no input file matches $glob")
+    all
+  }
+
   private def basename(p: String): String = p.substring(p.lastIndexOf('/') + 1)
 
   /** Ingest every not-yet-loaded file under `glob` into the
     * warehouse: extract per `layout`, append to compounds/, append
     * per-file stats to the manifest. Re-running with the same inputs
     * is a no-op (the skip set is filename-based, matching
-    * `get_sdf_files_not_in_db` utils.py:282). */
+    * `get_sdf_files_not_in_db` utils.py:282); a glob that matches no
+    * file at all is an error. */
   def ingest(spark: SparkSession, glob: String, warehouseDir: String,
              layout: LayoutSpec = LayoutSpec.default): IngestResult = {
-    val all = listSdfFiles(spark, glob)
+    val all = inputFiles(spark, glob)
     // lease held across pending-set computation + data write +
     // manifest append: a concurrent ingest/compact against the same
     // root fails loudly instead of double-appending manifest rows or
@@ -225,11 +326,13 @@ object Warehouse {
     * Scale shape: identical to N successive [[ingest]] calls — the
     * stream adds arrival tracking, not a new write path. Returns
     * the files loaded across all micro-batches plus the catch-up
-    * sweep. */
+    * sweep. Like [[ingest]], it fails before starting the stream when
+    * the glob matches no file. */
   def ingestStream(spark: SparkSession, glob: String, warehouseDir: String,
                    checkpoint: String,
                    layout: LayoutSpec = LayoutSpec.default): Seq[String] = {
     import org.apache.spark.sql.streaming.Trigger
+    inputFiles(spark, glob)
     val loaded = scala.collection.mutable.ArrayBuffer.empty[String]
     val records = Sdf.records(
       spark.readStream.option("lineSep", "$$$$").text(glob))
@@ -325,13 +428,14 @@ object Warehouse {
     * guard is a schema check on the already-resolved read. */
   def compounds(spark: SparkSession, warehouseDir: String): DataFrame = {
     val df = spark.read.parquet(compoundsDir(warehouseDir))
-    val needsPin = df.schema.exists(f =>
-      f.name == "src_filename" && f.dataType != org.apache.spark.sql.types.StringType)
+    val needsPin = df.schema.exists(f => f.name == "src_filename" && f.dataType != StringType)
     if (!needsPin) df
-    else spark.read.schema(org.apache.spark.sql.types.StructType(df.schema.map(f =>
-      if (f.name == "src_filename") f.copy(dataType = org.apache.spark.sql.types.StringType)
-      else f))).parquet(compoundsDir(warehouseDir))
+    else spark.read.schema(pinSrcFilename(df.schema)).parquet(compoundsDir(warehouseDir))
   }
+
+  /** `schema` with the partition column `src_filename` as string. */
+  private def pinSrcFilename(schema: StructType): StructType =
+    StructType(schema.map(f => if (f.name == "src_filename") f.copy(dataType = StringType) else f))
 
   /** Drop-and-recreate semantics of the reference's
     * `initialize_db(reset=True)` (utils.py:217-219): removes the
@@ -431,8 +535,7 @@ object Warehouse {
     val partSizes = fs.listStatus(dir).filter(_.isDirectory).map { st =>
       val name = st.getPath.getName
       val bytes = fs.listStatus(st.getPath).filter(_.isFile).map(_.getLen).sum
-      org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-        .unescapePathName(name.substring(name.indexOf('=') + 1)) -> bytes
+      ExternalCatalogUtils.unescapePathName(name.substring(name.indexOf('=') + 1)) -> bytes
     }.toSeq
     if (partSizes.isEmpty) return 0L
     val nOut = partSizes
@@ -559,10 +662,7 @@ object Warehouse {
     val staleEmpty = m.filter(col("filename").isin(cand: _*) && col("n_compounds") > 0)
       .select("filename").as[String].collect().toSeq
       .filterNot(hitNames)
-      .filterNot { f =>
-        val esc = org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.escapePathName(f)
-        fs.exists(new Path(dataDir, s"src_filename=$esc"))
-      }
+      .filterNot(f => fs.exists(partitionPath(warehouseDir, f)))
       .map(f => (f, 0L, 0L, Option.empty[Long], Option.empty[Long]))
     val stats = hitStats ++ staleEmpty
     if (stats.isEmpty) return RetractResult(Nil, Nil, 0L)
@@ -595,11 +695,7 @@ object Warehouse {
         // retracted rows live in 'src_filename=00123'). An explicit
         // schema declaring src_filename string makes the partition
         // value round-trip byte-identically (ADVICE r19).
-        val stageSchema = org.apache.spark.sql.types.StructType(part.schema.map(f =>
-          if (f.name == "src_filename")
-            f.copy(dataType = org.apache.spark.sql.types.StringType)
-          else f))
-        val stagedDf = spark.read.schema(stageSchema).parquet(stage.toString)
+        val stagedDf = spark.read.schema(pinSrcFilename(part.schema)).parquet(stage.toString)
         val after = stagedDf.count()
         val want = rewritten.map(_._3).sum
         require(after == want,
@@ -610,10 +706,7 @@ object Warehouse {
           .parquet(dataDir.toString)
         fs.delete(stage, true)
       }
-      emptied.foreach { case (f, _, _, _, _) =>
-        val esc = org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.escapePathName(f)
-        fs.delete(new Path(dataDir, s"src_filename=$esc"), true)
-      }
+      emptied.foreach { case (f, _, _, _, _) => fs.delete(partitionPath(warehouseDir, f), true) }
       // manifest repair through the tmp + swap pattern
       val repairs = stats.map { case (f, _, kept, lo, hi) =>
         (f, lo.map(long2Long).orNull, hi.map(long2Long).orNull, long2Long(kept))

@@ -93,4 +93,28 @@ class TablesSpec extends AnyFunSuite {
       assert(bad == 0L, s"$d: $bad documents violate n_chars == length(text)")
     }
   }
+
+  test("rowGroupCount counts a vanished file as one row group instead of failing") {
+    val dir = java.nio.file.Files.createTempDirectory("tables-rowgroups").toString
+    spark.range(10).write.parquet(s"$dir/t.parquet")
+    val file = new java.io.File(s"$dir/t.parquet").listFiles()
+      .filter(_.getName.endsWith(".parquet")).head
+    assert(Tables.rowGroupCount(spark, file.getPath) == 1)
+    assert(file.delete())
+    assert(Tables.rowGroupCount(spark, file.getPath) == 1)
+    assert(Tables.rowGroupCount(spark, s"$dir/never-written.parquet") == 1)
+  }
+
+  test("fingerprint is the SHA-256 of the sorted name:len:mtime listing of the table directory") {
+    // persisted IVF indexes and staged artifacts are keyed on this
+    // exact string: the digest must not change across refactors
+    val dir = java.nio.file.Files.createTempDirectory("tables-fingerprint").toString
+    spark.range(100).repartition(3).write.parquet(s"$dir/t.parquet")
+    val listing = new java.io.File(s"$dir/t.parquet").listFiles()
+      .filterNot(f => f.getName.startsWith(".") && f.getName.endsWith(".crc"))
+      .map(f => s"${f.getName}:${f.length}:${f.lastModified}").sorted.mkString("|")
+    val want = java.security.MessageDigest.getInstance("SHA-256")
+      .digest(listing.getBytes("UTF-8")).map("%02x".format(_)).mkString
+    assert(Tables.fingerprint(spark, dir, "t") == want)
+  }
 }
