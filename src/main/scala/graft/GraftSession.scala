@@ -97,9 +97,9 @@ object GraftSession {
   def local(cores: Int): SparkSession = {
     val s = builder(s"local[$cores]", cores).getOrCreate()
     s.sparkContext.setLogLevel("WARN")
-    // native functions (fnv1a64, vec_dot, vec_sqdist) available in
-    // every graft session — public helpers like Dedup.dot must not
-    // depend on some other operator having registered them first
+    // the native kernels callable by name from SQL in every graft
+    // session; graft's own operators build them through functions.F
+    // and need no registration
     functions.GraftFunctions.register(s)
     s
   }

@@ -61,73 +61,44 @@ case class Fnv1a64Expr(child: Expression) extends UnaryExpression {
   override def prettyName: String = "fnv1a64"
 }
 
-/** Session-level registration of graft's native functions. */
+/** The SQL names of graft's native kernels, for SQL users:
+  * `GraftSession.local` registers them once per session and
+  * [[GraftExtensions]] injects them on a cluster. Graft code calls the
+  * same kernels through the typed builders of [[F]] and never needs a
+  * registration. */
 object GraftFunctions {
+  /** The integer literal at `args(i)` — a plan-time constant of the
+    * kernel `fn`, named `arg` in the error. */
+  private def intLit(fn: String, arg: String, args: Seq[Expression], i: Int): Int =
+    args(i) match {
+      case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => v
+      case other => throw new IllegalArgumentException(
+        s"$fn: $arg must be an integer literal, got $other")
+    }
+
   val all: Seq[(String, Class[_], Seq[Expression] => Expression)] = Seq(
     ("fnv1a64", classOf[Fnv1a64Expr], args => Fnv1a64Expr(args.head)),
     ("vec_dot", classOf[VecDotExpr], args => VecDotExpr(args(0), args(1))),
     ("vec_sqdist", classOf[VecSqDistExpr], args => VecSqDistExpr(args(0), args(1))),
-    ("graft_shingles", classOf[ShinglesExpr], { args =>
-      val n = args(1) match {
-        case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => v
-        case other => throw new IllegalArgumentException(
-          s"graft_shingles: n must be an integer literal, got $other")
-      }
-      ShinglesExpr(args(0), n)
-    }),
+    ("graft_shingles", classOf[ShinglesExpr],
+      args => ShinglesExpr(args(0), intLit("graft_shingles", "n", args, 1))),
     ("graft_word_bigrams", classOf[WordBigramsExpr], args => WordBigramsExpr(args.head)),
-    ("graft_window_hashes", classOf[WindowHashesExpr], { args =>
-      val k = args(1) match {
-        case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => v
-        case other => throw new IllegalArgumentException(
-          s"graft_window_hashes: k must be an integer literal, got $other")
-      }
-      WindowHashesExpr(args(0), k)
-    }),
-    ("graft_hash_shingles", classOf[HashShinglesExpr], { args =>
-      val n = args(1) match {
-        case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => v
-        case other => throw new IllegalArgumentException(
-          s"graft_hash_shingles: n must be an integer literal, got $other")
-      }
-      HashShinglesExpr(args(0), n)
-    }),
-    ("graft_minhash_sig", classOf[MinhashSigExpr], { args =>
-      val perms = args(1) match {
-        case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => v
-        case other => throw new IllegalArgumentException(
-          s"graft_minhash_sig: perms must be an integer literal, got $other")
-      }
-      MinhashSigExpr(args(0), perms)
-    }),
+    ("graft_window_hashes", classOf[WindowHashesExpr],
+      args => WindowHashesExpr(args(0), intLit("graft_window_hashes", "k", args, 1))),
+    ("graft_hash_shingles", classOf[HashShinglesExpr],
+      args => HashShinglesExpr(args(0), intLit("graft_hash_shingles", "n", args, 1))),
+    ("graft_minhash_sig", classOf[MinhashSigExpr],
+      args => MinhashSigExpr(args(0), intLit("graft_minhash_sig", "perms", args, 1))),
     ("graft_text_stats", classOf[TextStatsExpr], args => TextStatsExpr(args.head)),
     ("graft_bpe_clean", classOf[BpeCleanExpr], args => BpeCleanExpr(args.head)),
     ("graft_pii_counts", classOf[PiiCountsExpr], args => PiiCountsExpr(args.head)),
     ("graft_pii_redact", classOf[PiiRedactExpr], args => PiiRedactExpr(args.head)),
-    ("graft_strip_dup_windows", classOf[StripDupWindowsExpr], { args =>
-      val k = args(2) match {
-        case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => v
-        case other => throw new IllegalArgumentException(
-          s"graft_strip_dup_windows: k must be an integer literal, got $other")
-      }
-      StripDupWindowsExpr(args(0), args(1), k)
-    }),
-    ("graft_dup_span_count", classOf[DupSpanCountExpr], { args =>
-      val k = args(1) match {
-        case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => v
-        case other => throw new IllegalArgumentException(
-          s"graft_dup_span_count: k must be an integer literal, got $other")
-      }
-      DupSpanCountExpr(args(0), k)
-    }),
-    ("vec_lsh_sign", classOf[VecLshSignExpr], { args =>
-      val nbits = args(1) match {
-        case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => v
-        case other => throw new IllegalArgumentException(
-          s"vec_lsh_sign: nbits must be an integer literal, got $other")
-      }
-      VecLshSignExpr(args(0), nbits)
-    }))
+    ("graft_strip_dup_windows", classOf[StripDupWindowsExpr],
+      args => StripDupWindowsExpr(args(0), args(1), intLit("graft_strip_dup_windows", "k", args, 2))),
+    ("graft_dup_span_count", classOf[DupSpanCountExpr],
+      args => DupSpanCountExpr(args(0), intLit("graft_dup_span_count", "k", args, 1))),
+    ("vec_lsh_sign", classOf[VecLshSignExpr],
+      args => VecLshSignExpr(args(0), intLit("vec_lsh_sign", "nbits", args, 1))))
 
   def register(spark: SparkSession): Unit = all.foreach { case (name, _, builder) =>
     spark.sessionState.functionRegistry.createOrReplaceTempFunction(name, builder, "built-in")

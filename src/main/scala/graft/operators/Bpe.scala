@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{GraftQuery, Tables}
+import graft.functions.F
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -78,11 +79,8 @@ object Bpe {
     * cleaned form. The Spark side runs the native one-pass kernel —
     * the regexp_replace form was the dominant cost of the honest
     * sf10 bench row — while the oracle keeps the defining regex
-    * (CleanedSql) and BpeSpec pins kernel == regex. */
-  private[graft] def cleanedCol(text: Column): Column = {
-    import org.apache.spark.sql.graftbridge.ColumnBridge
-    ColumnBridge.column(graft.functions.BpeCleanExpr(ColumnBridge.expression(text)))
-  }
+    * (CleanedSql) and BpeSpec pins kernel == regex
+    * ([[graft.functions.F.bpeClean]] vs `cleanedColRegex`). */
   private[graft] def cleanedColRegex(text: Column): Column =
     lower(regexp_replace(text, "[^A-Za-z0-9]+", " "))
   private val CleanedSql = "lower(regexp_replace(text, '[^A-Za-z0-9]+', ' ', 'g'))"
@@ -153,7 +151,7 @@ object Bpe {
     stagedMerges((dir, Tables.fingerprint(spark, dir, "documents"))) {
       val docs = Tables.documents(spark, dir)
       val wordCounts = docs
-        .select(col("doc_id"), cleanedCol(col("text")).as("c"))
+        .select(col("doc_id"), F.bpeClean(col("text")).as("c"))
         .orderBy(md5(col("doc_id").cast("string")), col("doc_id"))
         .limit(BpeSampleDocs)
         .select(explode(split(col("c"), " ")).as("w"))
@@ -207,28 +205,22 @@ object Bpe {
     val merges = mergesList(spark, dir)
     val codec = codecOf(merges)
     val codec64 = codecOf(merges.take(SubVocabRanks))
-    import org.apache.spark.sql.graftbridge.ColumnBridge
     val docs = Tables.documents(spark, dir)
     val p = spark.sparkContext.defaultParallelism
-    def kernelCount(c: graft.functions.BpeCodec) =
-      ColumnBridge.column(graft.functions.BpeTokenCountExpr(
-        ColumnBridge.expression(col("c")), c))
     docs
       // spread the scan off the single input split (the text-family
       // pinned-count repartition rationale — see TextOps)
       .repartition(p, col("doc_id"))
-      .select(col("doc_id"), cleanedCol(col("text")).as("c"))
+      .select(col("doc_id"), F.bpeClean(col("text")).as("c"))
       // cleaned text is pure [a-z0-9 ], so the regex-defined word
       // and alnum counts equal the fused stats kernel's \S+-run and
       // nonspace counts (elements 1 and 5) — the oracle keeps the
       // regex forms, the hash gate pins the equality
       .select(col("doc_id"),
-        element_at(ColumnBridge.column(graft.functions.TextStatsExpr(
-          ColumnBridge.expression(col("c")))), 1).as("n_words"),
-        element_at(ColumnBridge.column(graft.functions.TextStatsExpr(
-          ColumnBridge.expression(col("c")))), 5).as("n_alnum"),
-        kernelCount(codec).as("n_tokens"),
-        kernelCount(codec64).as("n_tokens_64"))
+        element_at(F.textStats(col("c")), 1).as("n_words"),
+        element_at(F.textStats(col("c")), 5).as("n_alnum"),
+        F.bpeTokenCount(col("c"), codec).as("n_tokens"),
+        F.bpeTokenCount(col("c"), codec64).as("n_tokens_64"))
       .filter(col("n_words") > 0)
       .select(col("doc_id"), col("n_words"), col("n_alnum"),
         col("n_tokens"), col("n_tokens_64"),

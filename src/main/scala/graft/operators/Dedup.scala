@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{GraftQuery, Tables}
+import graft.functions.F
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
@@ -20,18 +21,6 @@ import org.apache.spark.sql.functions._
   * (see Similarity.scala for the LSH/IVF scale paths).
   */
 object Dedup {
-
-  /** Distinct character n-gram shingles of a text column as STRINGS,
-    * via the native kernel (graft.functions.ShinglesExpr — the
-    * transform+array_distinct form interprets every substring
-    * through CodegenFallback lambdas; the kernel is one Java loop).
-    * The dedup operators themselves run end to end on HASHED
-    * shingles ([[sharedShingleArrays]]); this helper remains for
-    * callers that need the collision-free string sets.
-    * Requires GraftFunctions registration (GraftSession does it;
-    * operator entry points re-register defensively). */
-  def shingles(textCol: String, n: Int): Column =
-    expr(s"graft_shingles($textCol, $n)")
 
   // 16-char shingles (~3 words): discriminative enough that posting
   // lists stay short on small-vocabulary corpora. 8-char shingles
@@ -78,7 +67,6 @@ object Dedup {
     * exact up to 64-bit xxhash collisions (see the kernel's doc for
     * the honest bound). */
   def hashedShingleRows(docs: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     // repartition BEFORE the CPU-heavy shingling: a small input
     // (one parquet file = one partition) would otherwise pin the
     // whole kernel+explode on a single core; the shuffle moves only
@@ -88,7 +76,7 @@ object Dedup {
     // post-shuffle partition by AQE, re-serializing the kernel.
     val p = docs.sparkSession.sparkContext.defaultParallelism
     docs.repartition(p, col("doc_id"))
-      .select(col("doc_id"), explode(expr(s"graft_hash_shingles(text, $ShingleN)")).as("gh"))
+      .select(col("doc_id"), explode(F.hashShingles(col("text"), ShingleN)).as("gh"))
   }
 
   /** (doc_id, ghs, n): the per-doc hashed-shingle relation behind
@@ -117,7 +105,6 @@ object Dedup {
     * materialized shingle TABLE (write once, reuse across the whole
     * dedup campaign). */
   def sharedShingleArrays(docs: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     val p = docs.sparkSession.sparkContext.defaultParallelism
     // The exchange payload is exactly (doc_id, ghs) and n is derived
     // ABOVE it: exchange reuse compares canonicalized subtrees, so a
@@ -160,7 +147,7 @@ object Dedup {
       .select(coalesce(col("doc_id"),
           raise_error(lit("dedup: null doc_id in corpus — shingle dedup requires non-null document ids")).cast("long"),
           lit(Long.MinValue)).as("doc_id"),
-        coalesce(expr(s"graft_hash_shingles(text, $ShingleN)"),
+        coalesce(F.hashShingles(col("text"), ShingleN),
           typedLit(Array.empty[Long])).as("ghs"))
       .repartition(p, col("doc_id"))
       .select(col("doc_id"), col("ghs"), size(col("ghs")).as("n"))
@@ -948,7 +935,6 @@ object Dedup {
     // join/intersect far cheaper than 16-char strings). One shingle
     // pass per corpus, exact up to 64-bit xxhash collisions — see
     // the kernel's doc for the honest bound.
-    graft.functions.GraftFunctions.register(spark)
     // FULL sweep: ONE shared-exchange relation feeds the sketch
     // aggregate, the prefix kernel, and (through prefix) both sides
     // of the self-join — exactly TWO jobs, the CMS `head` and the
@@ -975,13 +961,8 @@ object Dedup {
             .select(expr(s"count_min_sketch(gh, ${CmsParams._1}d, ${CmsParams._2}d, ${CmsParams._3})"))
             .head.getAs[Array[Byte]](0)))
     }
-    // the sketch binds PER CALL, directly into the expression tree —
-    // a session-global temp function closing over it would let two
-    // interleaved calls on different dirs analyze against the wrong
-    // call's sketch (ADVICE r3)
-    import org.apache.spark.sql.graftbridge.ColumnBridge
-    val prefixArr = ColumnBridge.column(graft.functions.PpjoinPrefixExpr(
-      ColumnBridge.expression(col("ghs")), sketch, JaccardThreshold))
+    // the sketch binds PER CALL, directly into the expression tree
+    val prefixArr = F.ppjoinPrefix(col("ghs"), sketch, JaccardThreshold)
     val prefix = hashed
       .select(col("doc_id"), col("n"), explode(prefixArr).as("p"))
       .select(col("doc_id"), col("p.gh").as("gh"), col("p.rn").as("rn"), col("n"))
@@ -1170,22 +1151,6 @@ object Dedup {
         array((0 until MinhashPerms).map(k => col(s"mh_$k")): _*).as("sig"))
   }
 
-  /** Per-ROW minhash signature of one hashed-shingle array — the
-    * streaming twin's form: a stream computes each fresh document's
-    * signature inside its own row (no aggregation, so no streaming
-    * state), where the batch path min-aggregates exploded shingles.
-    * Both evaluate min over xxhash64(gh, k) for k in [0, 64) on the
-    * same long/int argument types, so the values are identical
-    * (spec-pinned); `array_min` on an empty array would yield null,
-    * so callers filter empty shingle sets first — mirroring the
-    * batch aggregation, where a doc with no shingles has no rows and
-    * thus no signature. */
-  private[graft] def rowMinhashSig(ghs: Column): Column = {
-    import org.apache.spark.sql.graftbridge.ColumnBridge
-    ColumnBridge.column(graft.functions.MinhashSigExpr(
-      ColumnBridge.expression(ghs), MinhashPerms))
-  }
-
   /** The kernel-path signature relation over a
     * [[sharedShingleArrays]]-shaped frame: one codegen'd loop per
     * document (1 hashLong + 64 hashInt per shingle), computed
@@ -1194,7 +1159,7 @@ object Dedup {
     * there). Zero-shingle docs are dropped, exactly as the aggregate
     * form never sees a row for them. */
   private def kernelSignatures(hashed: DataFrame): DataFrame =
-    hashed.select(col("doc_id"), col("n"), rowMinhashSig(col("ghs")).as("sig"))
+    hashed.select(col("doc_id"), col("n"), F.minhashSig(col("ghs"), MinhashPerms).as("sig"))
 
   /** PROVABLY-SAFE length prefilter on an (a, b) banded candidate
     * join (round 12): J(A,B) <= min|A|,|B| / max|A|,|B|, so a pair
@@ -1307,7 +1272,7 @@ object Dedup {
       // per-row kernel signature computed IN the write projection —
       // one shingle pass, no signature shuffle, no build join at all
       hashed
-        .select(col("doc_id"), col("ghs"), col("n"), rowMinhashSig(col("ghs")).as("sig"))
+        .select(col("doc_id"), col("ghs"), col("n"), F.minhashSig(col("ghs"), MinhashPerms).as("sig"))
         .write.mode("overwrite").parquet(MinhashSketchPath)
       // CMS over the STAGED table, not the live pipeline: same
       // counts (the staged rows ARE the pipeline's output), and the
@@ -1502,9 +1467,8 @@ object Dedup {
     * xxhash64 has none — which turns the whole operator from a
     * rows-only driver check into a hash-verified oracle entry. */
   def simhashSignatures(docs: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     val tok = TextOps.whitespaceTokens(docs) // shared `\S+` segmentation
-      .withColumn("h", expr("fnv1a64(term)"))
+      .withColumn("h", F.fnv1a64(col("term")))
     val bitSums = (0 until 64).map(i =>
       sum(when(expr(s"(shiftright(h, $i) & 1) = 1"), 1L).otherwise(-1L)).as(s"b_$i"))
     val sim = (0 until 64)
@@ -1548,7 +1512,6 @@ object Dedup {
     * corpus). */
   private[graft] def dedupSimhashBlocked(spark: SparkSession, dir: String,
                                          blockSize: Int): DataFrame = {
-    import org.apache.spark.sql.graftbridge.ColumnBridge
     val p = spark.sparkContext.defaultParallelism
     val bands = simhashBandsOf(simhashSignatures(Tables.documents(spark, dir)))
     val members = bands.groupBy(col("band"), col("bits"))
@@ -1568,10 +1531,7 @@ object Dedup {
     // GENERATOR, not explode(kernel(...)): a saturated band value
     // emits dense blocks whose pair output must stream straight into
     // the distinct's spillable aggregate, never buffer per task
-    val gen = ColumnBridge.column(graft.functions.SimhashPairsGen(
-      ColumnBridge.expression(col("ma")), ColumnBridge.expression(col("mb")),
-      ColumnBridge.expression(col("same")), HammingMax))
-    blockRows.select(gen)
+    blockRows.select(F.simhashPairs(col("ma"), col("mb"), col("same"), HammingMax))
       .distinct()
       .orderBy(col("doc_a"), col("doc_b"))
   }
@@ -1700,29 +1660,11 @@ object Dedup {
   // ---- dedup_embedding: exact cosine pairs (brute-force baseline) ----
   val CosineThreshold = 0.4
 
-  /** Left-associative Σ va[i]*vb[i] via the native codegen'd kernel
-    * (graft.functions.VecDotExpr) — the same IEEE op sequence as the
-    * oracle's list_reduce, so results are bit-identical across
-    * engines, but a plain Java loop instead of Spark's interpreted
-    * higher-order functions.
-    *
-    * (Two alternatives measured worse: aggregate(zip_with(...)) is
-    * CodegenFallback — interpreted lambda per element, ~10x slower
-    * on the pair join; an unrolled flat 64-term element_at chain
-    * blows past codegen method limits and deoptimizes, ~4x slower.) */
-  def dot(va: String, vb: String): Column =
-    expr(s"vec_dot($va, $vb)")
-
-  /** Σ (va[i]-vb[i])², same kernel treatment. */
-  def sqDist(va: String, vb: String): Column =
-    expr(s"vec_sqdist($va, $vb)")
-
   /** (vec_id, v, nrm): embeddings as doubles with L2 norms. The
     * element-wise double promotion + left-to-right summation makes
     * the cosine a fixed IEEE op sequence — bit-identical to the
     * oracle. */
   def embeddingsWithNorm(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     // pinned repartition before the per-vector compute for the same
     // reason as sharedShingleArrays: a small embeddings table is one
     // parquet file = one partition, which would serialize the
@@ -1737,13 +1679,13 @@ object Dedup {
     Tables.embeddings(spark, dir)
       .repartition(p)
       .select(col("vec_id"), expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("v"))
-      .withColumn("nrm", sqrt(dot("v", "v")))
+      .withColumn("nrm", sqrt(F.vecDot(col("v"), col("v"))))
   }
 
-  /** va/vb are SQL column references (e.g. "a.v"), resolved in the
-    * calling plan; norms are passed as Columns. */
-  def cosine(va: String, vb: String, na: Column, nb: Column): Column =
-    dot(va, vb).divide(na * nb)
+  /** Cosine of two array<double> columns from their dot product and
+    * precomputed L2 norms. */
+  def cosine(va: Column, vb: Column, na: Column, nb: Column): Column =
+    F.vecDot(va, vb).divide(na * nb)
 
   /** EXACT all-pairs cosine dedup — intentionally quadratic: this is
     * the bounded verification baseline for the ANN scale paths
@@ -1751,7 +1693,7 @@ object Dedup {
   def dedupEmbedding(spark: SparkSession, dir: String): DataFrame = {
     val e = embeddingsWithNorm(spark, dir)
     e.as("a").join(e.as("b"), col("a.vec_id") < col("b.vec_id"))
-      .withColumn("cos", cosine("a.v", "b.v", col("a.nrm"), col("b.nrm")))
+      .withColumn("cos", cosine(col("a.v"), col("b.v"), col("a.nrm"), col("b.nrm")))
       .filter(col("cos") >= CosineThreshold)
       .select(col("a.vec_id").as("vec_a"), col("b.vec_id").as("vec_b"),
         round(col("cos"), 6).as("cosine"))
@@ -2026,7 +1968,6 @@ object Dedup {
     * bound). */
   def dedupSubstring(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir)
-    graft.functions.GraftFunctions.register(spark)
     // Complement trick: dup_windows = n_windows - unique_windows.
     // A window with corpus-total 1 belongs to exactly ONE document
     // (its single occurrence), so after the per-window aggregate the
@@ -2047,7 +1988,7 @@ object Dedup {
     val w = docs.filter(col("n_chars") >= SubstringK)
       .repartition(p, col("doc_id"))
       .select(col("doc_id"),
-        explode(expr(s"graft_window_hashes(text, $SubstringK)")).as("wh"))
+        explode(F.windowHashes(col("text"), SubstringK)).as("wh"))
     // ONE aggregate over the exploded relation: total == 1 means the
     // window has a single occurrence in the whole corpus, so
     // min(doc_id) IS its owner and it contributes exactly one unique
@@ -2094,12 +2035,11 @@ object Dedup {
     * persisted per-window total table for `dir`. */
   def substringWindowTable(spark: SparkSession, dir: String): DataFrame = {
     stagedWindows((dir, Tables.fingerprint(spark, dir, "documents"))) {
-      graft.functions.GraftFunctions.register(spark)
       val p = spark.sparkContext.defaultParallelism
       Tables.documents(spark, dir).filter(col("n_chars") >= SubstringK)
         .repartition(p, col("doc_id"))
         .select(col("doc_id"),
-          explode(expr(s"graft_window_hashes(text, $SubstringK)")).as("wh"))
+          explode(F.windowHashes(col("text"), SubstringK)).as("wh"))
         .groupBy(col("wh")).agg(count(lit(1)).as("total"))
         .write.mode("overwrite").parquet(SubstringTablePath)
     }
@@ -2119,7 +2059,6 @@ object Dedup {
     * the full entry restricted to the slice (spec-pinned). */
   def dedupSubstringIncremental(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir)
-    graft.functions.GraftFunctions.register(spark)
     val restrict = incrementalSplit(docs)
       .map(split => col("doc_id") >= lit(split))
       .getOrElse(lit(false))
@@ -2132,13 +2071,13 @@ object Dedup {
     * (which feeds the REPAIRED totals): explode only `sliceDocs`'
     * text, inner-join window totals (lossless — every slice window
     * is in the table by construction), total == 1 means globally
-    * unique. Callers must have the graft kernels registered. */
+    * unique. */
   private[operators] def sliceProfileAgainst(sliceDocs: DataFrame, wt: DataFrame): DataFrame = {
     val p = sliceDocs.sparkSession.sparkContext.defaultParallelism
     val uniqPerDoc = sliceDocs
       .repartition(p, col("doc_id"))
       .select(col("doc_id"),
-        explode(expr(s"graft_window_hashes(text, $SubstringK)")).as("wh"))
+        explode(F.windowHashes(col("text"), SubstringK)).as("wh"))
       .join(wt, "wh")
       .filter(col("total") === 1)
       .groupBy(col("doc_id")).agg(count(lit(1)).as("uniq"))
@@ -2176,12 +2115,11 @@ object Dedup {
     * (short/clean docs pass through byte-identical). */
   def dedupSubstringClean(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir)
-    graft.functions.GraftFunctions.register(spark)
     val p = spark.sparkContext.defaultParallelism
     val w = docs.filter(col("n_chars") >= SubstringK)
       .repartition(p, col("doc_id"))
       .select(col("doc_id"),
-        posexplode(expr(s"graft_window_hashes(text, $SubstringK)")))
+        posexplode(F.windowHashes(col("text"), SubstringK)))
       .withColumnRenamed("col", "wh")
     val dps = w
       .withColumn("total", count(lit(1)).over(
@@ -2211,9 +2149,9 @@ object Dedup {
       .groupBy(col("doc_id"))
       .agg(max(col("text")).as("text"), max(col("dps")).as("dps"))
       .select(col("doc_id"),
-        expr(s"graft_strip_dup_windows(text, dps, $SubstringK)").as("clean"),
+        F.stripDupWindows(col("text"), col("dps"), SubstringK).as("clean"),
         length(col("text")).cast("long").as("len"),
-        expr(s"graft_dup_span_count(dps, $SubstringK)").cast("long").as("n_spans"))
+        F.dupSpanCount(col("dps"), SubstringK).cast("long").as("n_spans"))
       .select(col("doc_id"),
         length(col("clean")).cast("long").as("clean_chars"),
         (col("len") - length(col("clean"))).cast("long").as("n_removed"),
@@ -2233,7 +2171,6 @@ object Dedup {
     * same argument as the profile's incremental). */
   def dedupSubstringCleanIncremental(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir)
-    graft.functions.GraftFunctions.register(spark)
     val restrict = incrementalSplit(docs)
       .map(split => col("doc_id") >= lit(split))
       .getOrElse(lit(false))
@@ -2243,7 +2180,7 @@ object Dedup {
     val w = sliceDocs.filter(col("n_chars") >= SubstringK)
       .repartition(p, col("doc_id"))
       .select(col("doc_id"),
-        posexplode(expr(s"graft_window_hashes(text, $SubstringK)")))
+        posexplode(F.windowHashes(col("text"), SubstringK)))
       .withColumnRenamed("col", "wh")
     val dps = w.join(wt, "wh")
       .groupBy(col("doc_id"))

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{GraftQuery, Tables}
+import graft.functions.F
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -72,14 +73,13 @@ object Pack {
 
   def packSequences(spark: SparkSession, dir: String, nb: Long): DataFrame = {
     require(nb > 0, s"pack buckets must be positive, got $nb")
-    graft.functions.GraftFunctions.register(spark)
     // token measure = `\S+` count via the fused stats kernel
     // (element 1), spec-pinned equal to the regex the oracle runs —
     // the regexp_extract_all form was the scan bottleneck at sf10
     val toks = Tables.documents(spark, dir).select(
       col("doc_id"),
       (col("doc_id") % nb).as("bucket"),
-      element_at(expr("graft_text_stats(text)"), 1).as("n_tokens"))
+      element_at(F.textStats(col("text")), 1).as("n_tokens"))
       .where(col("n_tokens") > 0)
     packFrom(toks)
   }
@@ -150,12 +150,10 @@ object Pack {
     * recursive-CTE tokenization summed per document. */
   def packSequencesBpe(spark: SparkSession, dir: String): DataFrame = {
     val codec = Bpe.codecOf(Bpe.mergesList(spark, dir))
-    import org.apache.spark.sql.graftbridge.ColumnBridge
     val toks = Tables.documents(spark, dir).select(
       col("doc_id"),
       (col("doc_id") % DefaultBuckets).as("bucket"),
-      ColumnBridge.column(graft.functions.BpeTokenCountExpr(
-        ColumnBridge.expression(Bpe.cleanedCol(col("text"))), codec)).as("n_tokens"))
+      F.bpeTokenCount(F.bpeClean(col("text")), codec).as("n_tokens"))
       .where(col("n_tokens") > 0)
     packFrom(toks)
   }
@@ -261,10 +259,9 @@ object Pack {
     shardShuffle(spark, dir, DefaultShards)
 
   def shardShuffle(spark: SparkSession, dir: String, ns: Long): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val docs = Tables.documents(spark, dir).select(
       col("doc_id"),
-      element_at(expr("graft_text_stats(text)"), 1).as("n_tokens"))
+      element_at(F.textStats(col("text")), 1).as("n_tokens"))
     // plain orderBy, no Present boundary: this entry is WINDOW-shaped
     // — the stats kernel sits below the window's shard_ix exchange,
     // so the sort's range sampling replays only the (materialized)
@@ -317,10 +314,9 @@ object Pack {
     * live kernel computes, so consumers are identical either way. */
   def shardMeasureTable(spark: SparkSession, dir: String): DataFrame = {
     stagedMeasure((dir, Tables.fingerprint(spark, dir, "documents"))) {
-      graft.functions.GraftFunctions.register(spark)
       Tables.documents(spark, dir).select(
         col("doc_id"),
-        element_at(expr("graft_text_stats(text)"), 1).as("n_tokens"))
+        element_at(F.textStats(col("text")), 1).as("n_tokens"))
         .write.mode("overwrite").parquet(ShardMeasurePath)
     }
     graft.Tables.parquetCached(spark, ShardMeasurePath)
@@ -341,13 +337,12 @@ object Pack {
     * Output is IDENTICAL to the full operator (same oracle SQL, and
     * spec-pinned row-for-row). */
   def shardShuffleIncremental(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val docs = Tables.documents(spark, dir)
     val split = Dedup.incrementalSplit(docs).getOrElse(Long.MaxValue)
     val old = shardMeasureTable(spark, dir).filter(col("doc_id") < lit(split))
     val fresh = docs.filter(col("doc_id") >= lit(split)).select(
       col("doc_id"),
-      element_at(expr("graft_text_stats(text)"), 1).as("n_tokens"))
+      element_at(F.textStats(col("text")), 1).as("n_tokens"))
     shardsOf(old.unionByName(fresh), DefaultShards)
       .orderBy(col("shard_ix"), col("shard_pos"))
   }
@@ -382,11 +377,9 @@ object Pack {
     * projection feeding one shard_ix window exchange. */
   def shardShuffleBpe(spark: SparkSession, dir: String): DataFrame = {
     val codec = Bpe.codecOf(Bpe.mergesList(spark, dir))
-    import org.apache.spark.sql.graftbridge.ColumnBridge
     val docs = Tables.documents(spark, dir).select(
       col("doc_id"),
-      ColumnBridge.column(graft.functions.BpeTokenCountExpr(
-        ColumnBridge.expression(Bpe.cleanedCol(col("text"))), codec)).as("n_tokens"))
+      F.bpeTokenCount(F.bpeClean(col("text")), codec).as("n_tokens"))
     shardsOf(docs, DefaultShards).orderBy(col("shard_ix"), col("shard_pos"))
   }
 

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{GraftQuery, Tables}
+import graft.functions.F
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -155,7 +156,6 @@ object Retract {
     * touched-component edges only. No surviving text is re-read. */
   def repairedState(spark: SparkSession, dir: String): Unit =
     stagedRepair((dir, Tables.fingerprint(spark, dir, "documents"))) {
-      graft.functions.GraftFunctions.register(spark)
       val p = spark.sparkContext.defaultParallelism
       val docs = Tables.documents(spark, dir)
       val split = Dedup.incrementalSplit(docs).getOrElse(Long.MaxValue)
@@ -189,7 +189,7 @@ object Retract {
       val retOld = docs.filter(takedownPred && col("doc_id") < lit(split))
       val subBigrams = retOld
         .repartition(p, col("doc_id"))
-        .select(explode(expr("graft_word_bigrams(text)")).as("bigram"))
+        .select(explode(F.wordBigrams(col("text"))).as("bigram"))
         .groupBy(col("bigram")).agg(count(lit(1)).as("sub"))
       TextOps.ngramFreqStateTable(spark, dir)
         .join(subBigrams, Seq("bigram"), "left")
@@ -201,7 +201,7 @@ object Retract {
       val subWin = docs
         .filter(takedownPred && col("n_chars") >= Dedup.SubstringK)
         .repartition(p, col("doc_id"))
-        .select(explode(expr(s"graft_window_hashes(text, ${Dedup.SubstringK})")).as("wh"))
+        .select(explode(F.windowHashes(col("text"), Dedup.SubstringK)).as("wh"))
         .groupBy(col("wh")).agg(count(lit(1)).as("sub"))
       Dedup.substringWindowTable(spark, dir)
         .join(subWin, Seq("wh"), "left")
@@ -377,7 +377,6 @@ object Retract {
     * window STRINGS — full-recompute-minus-the-set. */
   def retractSubstringProfile(spark: SparkSession, dir: String): DataFrame = {
     repairedState(spark, dir)
-    graft.functions.GraftFunctions.register(spark)
     val docs = Tables.documents(spark, dir)
     val restrict = Dedup.incrementalSplit(docs)
       .map(split => col("doc_id") >= lit(split))

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{GraftQuery, Tables}
+import graft.functions.F
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -44,7 +45,7 @@ object Similarity {
   def annTopkBrute(spark: SparkSession, dir: String): DataFrame = {
     val e = Dedup.embeddingsWithNorm(spark, dir)
     val scored = e.join(broadcast(queriesOf(e)), col("q_id") =!= col("vec_id"))
-      .withColumn("score", round(Dedup.cosine("qv", "v", col("qn"), col("nrm")), 6))
+      .withColumn("score", round(Dedup.cosine(col("qv"), col("v"), col("qn"), col("nrm")), 6))
     topkWindow(scored)
   }
 
@@ -83,8 +84,7 @@ object Similarity {
     * vector. Same hash derivation and IEEE accumulation order, so
     * signatures are bit-identical to the fold form. */
   def lshSignature(e: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(e.sparkSession)
-    e.withColumn("sig", expr(s"vec_lsh_sign(v, $LshBits)"))
+    e.withColumn("sig", F.vecLshSign(col("v"), LshBits))
   }
 
   private def banded(sigDf: DataFrame, idCol: String): DataFrame = {
@@ -118,7 +118,6 @@ object Similarity {
     // The query-side branches filter on vec_id, which pushes past
     // the repartition to the parquet scan — they are bounded-row
     // side scans, not corpus consumers.
-    graft.functions.GraftFunctions.register(spark)
     val p = spark.sparkContext.defaultParallelism
     val shared = Tables.embeddings(spark, dir)
       .repartition(p)
@@ -142,12 +141,12 @@ object Similarity {
     val cand = queryBuckets.join(corpusBuckets, Seq("band", "bval"))
       .filter(col("q_id") =!= col("vec_id"))
       .select(col("q_id"), col("vec_id")).distinct()
-    val vecs = shared.withColumn("nrm", sqrt(Dedup.dot("v", "v")))
+    val vecs = shared.withColumn("nrm", sqrt(F.vecDot(col("v"), col("v"))))
     val qs = queries.select(col("vec_id").as("q_id"), col("v").as("qv"), col("nrm").as("qn"))
     val scored = cand
       .join(broadcast(qs), Seq("q_id"))
       .join(vecs, Seq("vec_id"))
-      .withColumn("score", round(Dedup.cosine("qv", "v", col("qn"), col("nrm")), 6))
+      .withColumn("score", round(Dedup.cosine(col("qv"), col("v"), col("qn"), col("nrm")), 6))
     // fully lazy: nothing is persisted, so there is no storage to
     // release and no materialization barrier before the caller's
     // terminal action
@@ -300,10 +299,6 @@ object Similarity {
   def ivfProbes(cells: Int): Int =
     math.max(4, math.ceil(2 * math.sqrt(cells.toDouble)).toInt)
 
-  /** Squared-L2 between two array<double> column refs — unrolled
-    * codegen form (see Dedup.dot). */
-  private def sqDist(a: String, b: String) = Dedup.sqDist(a, b)
-
   /** Assign each vector to its nearest centroid. `centroids` is a
     * k-row frame (cid, cv) — always broadcast. */
   def assignCells(e: DataFrame, centroids: DataFrame): DataFrame =
@@ -320,7 +315,7 @@ object Similarity {
     * here: every pre-agg row of a vec_id carries the same value. */
   private def assign(e: DataFrame, centroids: DataFrame): DataFrame =
     e.join(broadcast(centroids))
-      .withColumn("dc", struct(sqDist("v", "cv").as("dist"), col("cid").as("cid")))
+      .withColumn("dc", struct(F.vecSqDist(col("v"), col("cv")).as("dist"), col("cid").as("cid")))
       .groupBy(col("vec_id"))
       .agg(first(col("v")).as("v"), first(col("nrm")).as("nrm"), min(col("dc")).as("m"))
       .select(col("vec_id"), col("v"), col("nrm"), col("m.cid").as("cid"))
@@ -431,13 +426,13 @@ object Similarity {
                          lists: DataFrame, cells: Int): DataFrame = {
     val qw = Window.partitionBy(col("q_id")).orderBy(col("dist"), col("cid"))
     val probes = queriesOf(e).join(broadcast(centroids))
-      .withColumn("dist", sqDist("qv", "cv"))
+      .withColumn("dist", F.vecSqDist(col("qv"), col("cv")))
       .withColumn("rn", row_number().over(qw))
       .filter(col("rn") <= ivfProbes(cells))
       .select(col("q_id"), col("qv"), col("qn"), col("cid"))
     val scored = probes.join(lists, Seq("cid"))
       .filter(col("q_id") =!= col("vec_id"))
-      .withColumn("score", round(Dedup.cosine("qv", "v", col("qn"), col("nrm")), 6))
+      .withColumn("score", round(Dedup.cosine(col("qv"), col("v"), col("qn"), col("nrm")), 6))
       // IVF-A: a candidate reachable through both of its cells
       // arrives twice with a BIT-IDENTICAL score (same arithmetic
       // on the same rows) — dedup before ranking so row_number
@@ -829,11 +824,10 @@ object Similarity {
     // kernel-spreading repartition would add a 16-row shuffle stage
     // to a single-stage bounded read); the double promotion + norm
     // are the same expressions, so scores are bit-identical.
-    graft.functions.GraftFunctions.register(spark)
     val qRows = Tables.embeddings(spark, dir)
       .filter(col("vec_id") < QueryCount)
       .select(col("vec_id"), expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("v"))
-      .withColumn("nrm", sqrt(Dedup.dot("v", "v")))
+      .withColumn("nrm", sqrt(F.vecDot(col("v"), col("v"))))
       .as[(Long, Seq[Double], Double)].collect()
     // same ordering as probeLists' window: (dist, cid) ascending
     val probes = qRows.toSeq.flatMap { case (qid, qv, qn) =>
@@ -848,7 +842,7 @@ object Similarity {
       .filter(col("cid").isin(probedCids: _*))
     val scored = lists.join(broadcast(probesDf), Seq("cid"))
       .filter(col("q_id") =!= col("vec_id"))
-      .withColumn("score", round(Dedup.cosine("qv", "v", col("qn"), col("nrm")), 6))
+      .withColumn("score", round(Dedup.cosine(col("qv"), col("v"), col("qn"), col("nrm")), 6))
       // IVF-A dedup before ranking — see probeLists
       .select(col("q_id"), col("vec_id"), col("score"))
       .dropDuplicates("q_id", "vec_id")
@@ -950,28 +944,6 @@ object Similarity {
   private[graft] def pqStarts(dim: Int): Seq[Int] =
     (0 to PqM).map(j => j * dim / PqM)
 
-  /** Spark SQL literal for a double vector (D-suffixed terms;
-    * Double.toString round-trips through the parser bit-exactly). */
-  private def vecLitSql(xs: Seq[Double]): String =
-    xs.map(x => s"${x}D").mkString("array(", ", ", ")")
-
-  /** Column-level twins of the old `expr("vec_sqdist(...)")` string
-    * forms (r20): the encoder builds m x k of these per plan, each
-    * carrying a subdim-double literal, and generating + re-PARSING
-    * those SQL strings on every plan construction was driver time
-    * inside the timed region (the parse also built k x subdim
-    * CreateArray nodes for the optimizer to re-fold per call).
-    * Constructing the Catalyst nodes directly yields the same
-    * operators over the same literal values — `typedlit` emits
-    * exactly the folded ArrayType(Double) literal the parsed
-    * `array(aD, bD…)` collapses to — so every emitted value is
-    * unchanged; only plan-construction cost moves. */
-  private def sqDistCol(a: Column, b: Column): Column = {
-    import org.apache.spark.sql.graftbridge.ColumnBridge
-    ColumnBridge.column(graft.functions.VecSqDistExpr(
-      ColumnBridge.expression(a), ColumnBridge.expression(b)))
-  }
-
   /** One literal Column per codeword list — built once per plan and
     * shared across the m x k encoder terms. */
   private def vecLit(xs: Seq[Double]): Column = typedlit(xs)
@@ -1065,7 +1037,6 @@ object Similarity {
     * pricing note as the ivf/semantic family). */
   def annPq(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
     val e = Dedup.embeddingsWithNorm(spark, dir)
     val n = e.count()
     val dim = e.select(size(col("v")).as("d")).head().getInt(0)
@@ -1081,7 +1052,7 @@ object Similarity {
     // match of the min — the SQL twin's ORDER BY (dist, cid))
     def codeExpr(j: Int): Column = {
       val sub = slice(col("v"), starts(j) + 1, starts(j + 1) - starts(j))
-      val ds = array(codebooks(j).map { case (_, cv) => sqDistCol(sub, vecLit(cv)) }: _*)
+      val ds = array(codebooks(j).map { case (_, cv) => F.vecSqDist(sub, vecLit(cv)) }: _*)
       (array_position(ds, array_min(ds)) - 1).cast("int")
     }
     val coded = e.select(col("vec_id"), col("v"),
@@ -1095,11 +1066,11 @@ object Similarity {
     // codes; candidates' full vectors are fetched by id)
     val scored = coded.withColumn("rv", recon)
       .join(broadcast(queriesOf(e)), col("q_id") =!= col("vec_id"))
-      .withColumn("adist", round(Dedup.sqDist("qv", "rv"), 6))
+      .withColumn("adist", round(F.vecSqDist(col("qv"), col("rv")), 6))
     val cw = Window.partitionBy(col("q_id")).orderBy(col("adist"), col("vec_id"))
     val candidates = scored.withColumn("crank", row_number().over(cw))
       .filter(col("crank") <= PqRerank)
-      .withColumn("dist", round(Dedup.sqDist("qv", "v"), 6))
+      .withColumn("dist", round(F.vecSqDist(col("qv"), col("v")), 6))
     val w = Window.partitionBy(col("q_id")).orderBy(col("dist"), col("vec_id"))
     candidates.withColumn("rank", row_number().over(w))
       .filter(col("rank") <= TopK)
@@ -1228,7 +1199,6 @@ object Similarity {
     * SimilaritySpec (the floor composes IVF's cell-miss rate with
     * PQ's coarse-ranking miss rate). */
   def annIvfPq(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val idx = ivfIndex(spark, dir)
     stageCentroids(spark, idx)
     ensureIvfPqArtifacts(spark, dir, idx)
@@ -1292,7 +1262,7 @@ object Similarity {
   private def pqCodesExpr(codebooks: Seq[Seq[Seq[Double]]], starts: Seq[Int]): Column = {
     def codeExpr(j: Int): Column = {
       val sub = slice(col("v"), starts(j) + 1, starts(j + 1) - starts(j))
-      val ds = array(codebooks(j).map(cv => sqDistCol(sub, vecLit(cv))): _*)
+      val ds = array(codebooks(j).map(cv => F.vecSqDist(sub, vecLit(cv))): _*)
       (array_position(ds, array_min(ds)) - 1).cast("int")
     }
     array((0 until PqM).map(codeExpr): _*)
@@ -1333,7 +1303,7 @@ object Similarity {
     val scored = codes.withColumn("rv", recon)
       .join(broadcast(probesDf), Seq("cid"))
       .filter(col("q_id") =!= col("vec_id"))
-      .withColumn("adist", round(Dedup.sqDist("qv", "rv"), 6))
+      .withColumn("adist", round(F.vecSqDist(col("qv"), col("rv")), 6))
       // IVF-A: both arrival paths carry the same codes, hence a
       // bit-identical adist — dedup before the rerank-cut window so
       // a twice-reached candidate doesn't eat two PqRerank slots
@@ -1349,7 +1319,7 @@ object Similarity {
       .dropDuplicates("vec_id")
     val w = Window.partitionBy(col("q_id")).orderBy(col("dist"), col("vec_id"))
     candidates.join(fetch, Seq("vec_id"))
-      .withColumn("dist", round(Dedup.sqDist("qv", "v"), 6))
+      .withColumn("dist", round(F.vecSqDist(col("qv"), col("v")), 6))
       .withColumn("rank", row_number().over(w))
       .filter(col("rank") <= TopK)
       .select(col("q_id"), col("vec_id"), col("rank").cast("long").as("rank"), col("dist"))
@@ -1499,7 +1469,6 @@ object Similarity {
     * spec-exercised; the graded entry unions lazily so repeated runs
     * stay idempotent. */
   def annIvfPqAppend(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val idx = ivfIndex(spark, dir)
     stageCentroids(spark, idx)
     ensureIvfPqArtifacts(spark, dir, idx)
@@ -1549,7 +1518,7 @@ object Similarity {
     for (_ <- 1 to p) {
       cur = cur.join(broadcast(centroids))
         .filter(!array_contains(col("cids"), col("cid")))
-        .withColumn("dc", struct(sqDist("v", "cv").as("dist"), col("cid").as("cid")))
+        .withColumn("dc", struct(F.vecSqDist(col("v"), col("cv")).as("dist"), col("cid").as("cid")))
         .groupBy(col("vec_id"))
         .agg(first(col("v")).as("v"), first(col("nrm")).as("nrm"),
           first(col("cids")).as("cids"), min(col("dc")).as("m"))
@@ -1574,11 +1543,8 @@ object Similarity {
     * form row-for-row. */
   private[graft] def assignMultiKernel(e: DataFrame, cents: Seq[(Int, Seq[Double])],
                                        p: Int): DataFrame = {
-    import org.apache.spark.sql.graftbridge.ColumnBridge
-    val cids = cents.map(_._1).toArray
-    val mat = cents.map(_._2.toArray).toArray
-    val cells = ColumnBridge.column(graft.functions.TopCellsExpr(
-      ColumnBridge.expression(col("v")), cids, mat, math.min(p, cents.size)))
+    val cells = F.topCells(col("v"), cents.map(_._1).toArray,
+      cents.map(_._2.toArray).toArray, math.min(p, cents.size))
     e.select(col("vec_id"), col("v"), col("nrm"), explode(cells).as("cid"))
   }
 
@@ -1719,11 +1685,9 @@ object Similarity {
       // never rows, and the distinct sees the near-dup-sized
       // survivor set. Arithmetic is bit-identical to the join form
       // (same dot/divide/round ops) — spec-pinned equal.
-      import org.apache.spark.sql.graftbridge.ColumnBridge
       val members = multi.groupBy(col("cid"))
         .agg(collect_list(struct(col("vec_id"), col("v"), col("nrm"))).as("ms"))
-      val pairs = ColumnBridge.column(graft.functions.CellPairsExpr(
-        ColumnBridge.expression(col("ms")), SemanticThreshold))
+      val pairs = F.cellPairs(col("ms"), SemanticThreshold)
       members.select(explode(pairs).as("p"))
         .select(col("p.vec_a").as("vec_a"), col("p.vec_b").as("vec_b"),
           col("p.cosine").as("cosine"))
@@ -1736,7 +1700,7 @@ object Similarity {
         col("v").as("vb"), col("nrm").as("nb"))
       a.join(b, Seq("cid"))
         .filter(col("vec_a") < col("vec_b"))
-        .withColumn("cos", Dedup.cosine("va", "vb", col("na"), col("nb")))
+        .withColumn("cos", Dedup.cosine(col("va"), col("vb"), col("na"), col("nb")))
         .filter(col("cos") >= SemanticThreshold)
         .select(col("vec_a"), col("vec_b"), round(col("cos"), 6).as("cosine"))
         .distinct()

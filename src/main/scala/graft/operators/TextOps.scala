@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{GraftQuery, Tables}
+import graft.functions.F
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -44,24 +45,11 @@ object TextOps {
       .select(col("doc_id"), explode(regexp_extract_all(col("text"), lit(WsToken), lit(0))).as("term"))
   }
 
-  /** The fused stats kernel (see TextKernels.textStats): ONE code-
-    * point pass replaces the per-entry stack of regexp_extract_all
-    * counts, which benched 3-19x behind DuckDB's RE2 once the bench
-    * action stopped letting Catalyst prune them (round 12). The
-    * regexes remain the DEFINITION — the oracles still run them, and
-    * TextOpsSpec pins kernel == regex per column on the corpus. CSE
-    * evaluates the repeated subexpression once per row in the
-    * collapsed projection (spec-pinned via the plan). */
-  private def stats(spark: SparkSession): Column = {
-    graft.functions.GraftFunctions.register(spark)
-    expr("graft_text_stats(text)")
-  }
-
   // projection-shaped entries present through graft.Present.ordered:
   // a bare orderBy's range-bound sampling re-runs the scan + kernel
   // (measured: langid 8.09 -> 3.4 s class at sf10 — see Present)
   def textTokens(spark: SparkSession, dir: String): DataFrame = {
-    val st = stats(spark)
+    val st = F.textStats(col("text"))
     graft.Present.ordered(
       Tables.documents(spark, dir).select(
         col("doc_id"),
@@ -81,7 +69,7 @@ object TextOps {
     * a single correctly-rounded op in both engines. */
   def textQuality(spark: SparkSession, dir: String): DataFrame = {
     val d = Tables.documents(spark, dir)
-    val st = stats(spark)
+    val st = F.textStats(col("text"))
     val nChars = length(col("text")).cast("long")
     val nWords = element_at(st, 1)
     val nPunct = element_at(st, 3)
@@ -126,7 +114,7 @@ object TextOps {
     * tie-break is explicit so both engines agree. */
   def textLangid(spark: SparkSession, dir: String): DataFrame = {
     val d = Tables.documents(spark, dir)
-    val st = stats(spark)
+    val st = F.textStats(col("text"))
     // kernel layout positions 6..10 are the profile hit counts in
     // Profiles order (de en es fr zh)
     val hits = Profiles.zipWithIndex.map { case ((l, _), i) =>
@@ -201,11 +189,10 @@ object TextOps {
     * pipeline filters or redacts on. Pure codegen'd regex counts
     * over the scan, like the other text metrics. */
   def textPii(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     // hand automata for the three fixed patterns (17x RE2 as Java
     // NFAs under the honest bench); regex parity spec-pinned and the
     // oracle keeps the regex definitions
-    val pc = expr("graft_pii_counts(text)")
+    val pc = F.piiCounts(col("text"))
     graft.Present.ordered(
       Tables.documents(spark, dir).select(
         col("doc_id"),
@@ -235,11 +222,10 @@ object TextOps {
     * one codegen'd projection, the Present boundary under the
     * presentation sort — the text-family plan shape. */
   def textPiiRedact(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     graft.Present.ordered(
       Tables.documents(spark, dir).select(
         col("doc_id"),
-        md5(expr("graft_pii_redact(text)")).as("redacted_md5")),
+        md5(F.piiRedact(col("text"))).as("redacted_md5")),
       col("doc_id"))
   }
 
@@ -259,10 +245,9 @@ object TextOps {
     * engines compute the identical public-domain hash bit-for-bit;
     * value-pinning additionally lives in TextOpsSpec. */
   def textFingerprint(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     graft.Present.ordered(
       Tables.documents(spark, dir)
-        .select(col("doc_id"), expr("fnv1a64(text)").as("fingerprint")),
+        .select(col("doc_id"), F.fnv1a64(col("text")).as("fingerprint")),
       col("doc_id"))
   }
 
@@ -275,7 +260,6 @@ object TextOps {
     * inside the per-element lambda after projection collapse —
     * judge-measured at 3.7 s for 5,000 docs at sf0.1. */
   def textNgramFreq(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     Tables.documents(spark, dir)
       // spread the scan off the single input split (one parquet file
       // = one partition); the shuffled text is a fraction of the
@@ -283,7 +267,7 @@ object TextOps {
       // (AQE would coalesce a by-col repartition of the small doc
       // relation to one partition, serializing the kernel)
       .repartition(spark.sparkContext.defaultParallelism, col("doc_id"))
-      .select(explode(expr("graft_word_bigrams(text)")).as("bigram"))
+      .select(explode(F.wordBigrams(col("text"))).as("bigram"))
       .groupBy(col("bigram")).agg(count(lit(1)).as("freq"))
       .orderBy(col("freq").desc, col("bigram"))
       .limit(20)
@@ -303,12 +287,11 @@ object TextOps {
     * bigram counts. */
   def ngramFreqStateTable(spark: SparkSession, dir: String): DataFrame = {
     stagedNgramFreq((dir, graft.Tables.fingerprint(spark, dir, "documents"))) {
-      graft.functions.GraftFunctions.register(spark)
       val docs = Tables.documents(spark, dir)
       val split = graft.operators.Dedup.incrementalSplit(docs).getOrElse(Long.MaxValue)
       docs.filter(col("doc_id") < lit(split))
         .repartition(spark.sparkContext.defaultParallelism, col("doc_id"))
-        .select(explode(expr("graft_word_bigrams(text)")).as("bigram"))
+        .select(explode(F.wordBigrams(col("text"))).as("bigram"))
         .groupBy(col("bigram")).agg(count(lit(1)).as("freq"))
         .write.mode("overwrite").parquet(NgramFreqStatePath)
     }
@@ -323,12 +306,11 @@ object TextOps {
     * the incrementality exact — identical output, same oracle,
     * spec-pinned. */
   def textNgramFreqIncremental(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val docs = Tables.documents(spark, dir)
     val split = graft.operators.Dedup.incrementalSplit(docs).getOrElse(Long.MaxValue)
     val fresh = docs.filter(col("doc_id") >= lit(split))
       .repartition(spark.sparkContext.defaultParallelism, col("doc_id"))
-      .select(explode(expr("graft_word_bigrams(text)")).as("bigram"))
+      .select(explode(F.wordBigrams(col("text"))).as("bigram"))
       .groupBy(col("bigram")).agg(count(lit(1)).as("freq"))
     ngramFreqStateTable(spark, dir).unionByName(fresh)
       .groupBy(col("bigram")).agg(sum(col("freq")).as("freq"))
@@ -369,14 +351,13 @@ object TextOps {
     * rest of the text family. Docs with no bigram (≤1 word) have no
     * row, identically in both engines. */
   def textRepetition(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val p = spark.sparkContext.defaultParallelism
     val counts = Tables.documents(spark, dir)
       // pinned-count repartition: see whitespaceTokens (AQE would
       // coalesce a by-col shuffle of the byte-small doc relation to
       // one partition and run the kernel serially)
       .repartition(p, col("doc_id"))
-      .select(col("doc_id"), explode(expr("graft_word_bigrams(text)")).as("bigram"))
+      .select(col("doc_id"), explode(F.wordBigrams(col("text"))).as("bigram"))
       .groupBy(col("doc_id"), col("bigram")).agg(count(lit(1)).as("c"))
     val nDup = coalesce(sum(when(col("c") > 1, col("c"))), lit(0L))
     counts.groupBy(col("doc_id"))

@@ -541,7 +541,10 @@ object Warehouse {
     val nOut = partSizes
       .map { case (p, b) => (p, math.max(1L, (b + targetFileBytes - 1) / targetFileBytes)) }
     val targets = nOut.toDF("src_filename", "n_out")
-    val data = spark.read.parquet(dir.toString)
+    // the string-pinned read: an inferred read would narrow an
+    // all-digit name ('00123') to a number and rewrite its partition
+    // under another name ('src_filename=123')
+    val data = compounds(spark, warehouseDir)
     // salt on a data column's hash: deterministic spread of a hot
     // partition across its n_out output files. LEFT join + coalesce:
     // a partition that somehow missed the sizing list still keeps

@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.{Exact, GraftQuery}
+import graft.functions.F
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
@@ -315,7 +316,7 @@ object Streams {
     * ingest-time gate without changing results.
     *
     * Streaming shapes, piece by piece:
-    *  - per-row sketch: `rowMinhashSig` computes the 64-perm
+    *  - per-row sketch: `F.minhashSig` computes the 64-perm
     *    signature inside each document's row (identical values to
     *    the batch aggregate — one lemma, spec-pinned), so the stream
     *    side carries NO aggregation state;
@@ -364,7 +365,6 @@ object Streams {
   private def gateScoredPairs(spark: SparkSession, dir: String,
                               fresh: DataFrame, carry: Seq[String]): DataFrame = {
     import graft.operators.Dedup
-    graft.functions.GraftFunctions.register(spark)
     val p = spark.sparkContext.defaultParallelism
     // persisted corpus side: (doc_id, ghs, n, sig), built once per
     // corpus version (fingerprint-keyed) — reading it here is what
@@ -382,9 +382,9 @@ object Streams {
       // post-kernel size filter would let pushdown substitute the
       // kernel into the scan's filter and run it twice per row)
       .filter(length(col("text")) >= Dedup.ShingleN)
-      .select(col("doc_id") +: expr(s"graft_hash_shingles(text, ${Dedup.ShingleN})").as("ghs") +: c: _*)
+      .select(col("doc_id") +: F.hashShingles(col("text"), Dedup.ShingleN).as("ghs") +: c: _*)
       .select(col("doc_id") +: col("ghs") +: size(col("ghs")).as("n") +:
-        Dedup.rowMinhashSig(col("ghs")).as("sig") +: c: _*)
+        F.minhashSig(col("ghs"), Dedup.MinhashPerms).as("sig") +: c: _*)
     val freshBands = Dedup.lshBandsOf(sigs, p, carry = Seq("ghs", "n") ++ carry)
     val cand = corpusBands.as("a")
       .join(freshBands.as("b"),
@@ -445,7 +445,6 @@ object Streams {
     * (spec-pinned), so the batch oracle applies unchanged. */
   def streamSubstringProfile(spark: SparkSession, dir: String): DataFrame = {
     import graft.operators.Dedup
-    graft.functions.GraftFunctions.register(spark)
     val docsBatch = graft.Tables.documents(spark, dir)
     val schema = docsBatch.schema
     val wt = Dedup.substringWindowTable(spark, dir)
@@ -458,7 +457,7 @@ object Streams {
     val w = fresh
       .select(col("doc_id"),
         (length(col("text")) - lit(Dedup.SubstringK - 1)).cast("long").as("n_windows"),
-        explode(expr(s"graft_window_hashes(text, ${Dedup.SubstringK})")).as("wh"))
+        explode(F.windowHashes(col("text"), Dedup.SubstringK)).as("wh"))
     val profile = w.join(wt, "wh")
       .groupBy(col("doc_id"), col("n_windows"))
       .agg(sum(when(col("total") === 1, 1L).otherwise(0L)).as("uniq"))
@@ -496,7 +495,6 @@ object Streams {
   def streamSubstringProfileBounded(spark: SparkSession, dir: String,
                                     fresh: DataFrame, delay: String): DataFrame = {
     import graft.operators.Dedup
-    graft.functions.GraftFunctions.register(spark)
     val wt = Dedup.substringWindowTable(spark, dir)
     val marked = fresh
       .filter(length(col("text")).cast("long") >= Dedup.SubstringK)
@@ -504,7 +502,7 @@ object Streams {
       .dropDuplicatesWithinWatermark("doc_id")
     val w = marked.select(col("doc_id"), col("ingest_ts"),
       (length(col("text")) - lit(Dedup.SubstringK - 1)).cast("long").as("n_windows"),
-      explode(expr(s"graft_window_hashes(text, ${Dedup.SubstringK})")).as("wh"))
+      explode(F.windowHashes(col("text"), Dedup.SubstringK)).as("wh"))
     w.join(wt, "wh")
       .groupBy(col("doc_id"), col("n_windows"), window(col("ingest_ts"), "1 minute"))
       .agg(sum(when(col("total") === 1, 1L).otherwise(0L)).as("uniq"))
@@ -576,7 +574,6 @@ object Streams {
     * convention). */
   def streamCurateGate(spark: SparkSession, dir: String): DataFrame = {
     import graft.operators.{Curation, Dedup}
-    graft.functions.GraftFunctions.register(spark)
     ensureStreamDocPairsStaged(spark, dir)
     val docsBatch = graft.Tables.documents(spark, dir)
     val schema = docsBatch.schema
@@ -585,7 +582,7 @@ object Streams {
     val fresh = Dedup.incrementalSplit(docsBatch)
       .map(split => freshAll.filter(col("doc_id") >= lit(split)))
       .getOrElse(freshAll.filter(lit(false)))
-    val st = expr("graft_text_stats(text)")
+    val st = F.textStats(col("text"))
     val nChars = length(col("text")).cast("long")
     val q = fresh.filter(
       nChars >= lit(Curation.CurateMinChars) && nChars <= lit(Curation.CurateMaxChars) &&
@@ -652,10 +649,9 @@ object Streams {
   def streamCurateGateBounded(spark: SparkSession, dir: String,
                               fresh: DataFrame, delay: String): DataFrame = {
     import graft.operators.{Curation, Dedup}
-    graft.functions.GraftFunctions.register(spark)
     val marked = fresh.withWatermark("ingest_ts", delay)
       .dropDuplicatesWithinWatermark("doc_id")
-    val st = expr("graft_text_stats(text)")
+    val st = F.textStats(col("text"))
     val nChars = length(col("text")).cast("long")
     val q = marked.filter(
       nChars >= lit(Curation.CurateMinChars) && nChars <= lit(Curation.CurateMaxChars) &&
@@ -699,13 +695,12 @@ object Streams {
     * within-shard permutation — meaningless to totals — drops out). */
   def streamShardAssign(spark: SparkSession, dir: String): DataFrame = {
     import graft.operators.Pack
-    graft.functions.GraftFunctions.register(spark)
     val schema = graft.Tables.documents(spark, dir).schema
     val docs = spark.readStream.schema(schema)
       .option("pathGlobFilter", "documents.parquet").parquet(dir)
     val measured = docs.select(
       col("doc_id"),
-      element_at(expr("graft_text_stats(text)"), 1).as("n_tokens"))
+      element_at(F.textStats(col("text")), 1).as("n_tokens"))
     val totals = Pack.shardKeyed(measured, Pack.DefaultShards)
       .groupBy(col("shard_ix"))
       .agg(count(lit(1)).as("n_docs"),

@@ -1,6 +1,6 @@
 package graft
 
-import graft.functions.BpeCodec
+import graft.functions.{BpeCodec, F}
 import graft.operators.Bpe
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -46,7 +46,7 @@ class BpeSpec extends AnyFunSuite {
     import org.apache.spark.sql.graftbridge.ColumnBridge
     val kernel = ColumnBridge.column(graft.functions.BpeTokenCountExpr(
       ColumnBridge.expression(col("c")), codec))
-    val both = docs.select(col("doc_id"), Bpe.cleanedCol(col("text")).as("c"))
+    val both = docs.select(col("doc_id"), F.bpeClean(col("text")).as("c"))
       .select(col("doc_id"), kernel.as("k"),
         Bpe.replaceChainCount(col("c"), merges).as("ref"))
       .collect()
@@ -107,7 +107,7 @@ class BpeSpec extends AnyFunSuite {
     import org.apache.spark.sql.graftbridge.ColumnBridge
     val kernel = ColumnBridge.column(graft.functions.BpeTokenCountExpr(
       ColumnBridge.expression(col("c")), codec64))
-    val bad = docs.select(Bpe.cleanedCol(col("text")).as("c"))
+    val bad = docs.select(F.bpeClean(col("text")).as("c"))
       .select(kernel.as("k"), Bpe.replaceChainCount(col("c"), sub).as("ref"))
       .filter(col("k") =!= col("ref")).count()
     assert(bad == 0, s"$bad rows where the 64-rank kernel diverges from the replace chain")
@@ -158,7 +158,7 @@ class BpeSpec extends AnyFunSuite {
       .toDF("text")
     val all = Tables.documents(spark, dir).select(col("text")).unionByName(edge)
     val bad = all.filter(
-      operators.Bpe.cleanedCol(col("text")) =!=
+      F.bpeClean(col("text")) =!=
         operators.Bpe.cleanedColRegex(col("text"))).count()
     assert(bad == 0, s"$bad rows where the clean kernel diverges from the regex")
   }

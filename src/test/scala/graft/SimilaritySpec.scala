@@ -41,7 +41,7 @@ class SimilaritySpec extends AnyFunSuite {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("q_id")).orderBy(col("d"), col("vec_id"))
     pairs(e.join(broadcast(q), col("q_id") =!= col("vec_id"))
-      .withColumn("d", operators.Dedup.sqDist("qv", "v"))
+      .withColumn("d", graft.functions.F.vecSqDist(col("qv"), col("v")))
       .withColumn("rank", row_number().over(w))
       .filter(col("rank") <= Similarity.TopK)
       .select(col("q_id"), col("vec_id")))

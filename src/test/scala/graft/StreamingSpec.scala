@@ -136,7 +136,7 @@ class StreamingSpec extends AnyFunSuite {
     val batch = operators.Dedup.minhashSignatures(docs)
       .orderBy(col("doc_id")).collect().map(r => (r.getLong(0), r.getSeq[Long](1)))
     val perRow = hashed.filter(size(col("ghs")) > 0)
-      .select(col("doc_id"), operators.Dedup.rowMinhashSig(col("ghs")).as("sig"))
+      .select(col("doc_id"), graft.functions.F.minhashSig(col("ghs"), operators.Dedup.MinhashPerms).as("sig"))
       .orderBy(col("doc_id")).collect().map(r => (r.getLong(0), r.getSeq[Long](1)))
     assert(batch.nonEmpty)
     assert(perRow.toSeq == batch.toSeq)
